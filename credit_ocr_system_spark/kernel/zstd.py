@@ -241,15 +241,27 @@ class _FseState:
 # --------------------------------------------------------- Huffman
 
 
+_HUF_MAX_BITS = 11
+
+
 def _huff_from_weights(weights: list[int]):
     """(max_bits, table) — table maps a max_bits-wide prefix to
     (symbol, length). Weight w>0 means length max_bits+1-w; the last
-    symbol's weight is implied to complete a power of two."""
+    symbol's weight is implied to complete a power of two. Code
+    lengths are capped at ``_HUF_MAX_BITS`` (RFC 8878 §4.2.1): an
+    FSE-coded weight may be any byte, and an uncapped one would size
+    the decode table at ``1 << weight``."""
+    if any(w > _HUF_MAX_BITS for w in weights):
+        raise ZstdError(
+            f"huffman weight above the {_HUF_MAX_BITS}-bit maximum")
     total = sum((1 << (w - 1)) for w in weights if w > 0)
     if total == 0:
         raise ZstdError("empty huffman weights")
     # the implied last weight completes the NEXT power of two
     max_bits = _highbit(total) + 1
+    if max_bits > _HUF_MAX_BITS:
+        raise ZstdError(
+            f"huffman code length above the {_HUF_MAX_BITS}-bit maximum")
     left = (1 << max_bits) - total
     if left <= 0 or left & (left - 1):
         raise ZstdError("huffman weights: invalid completion")
@@ -470,6 +482,8 @@ def _seq_table(fb_data: bytes, pos: int, mode: int, which: str,
         state[which] = (table, acc, None)
         return pos
     if mode == 1:   # RLE: one byte = the only symbol
+        if pos >= len(fb_data):
+            raise ZstdError(f"truncated {which} RLE sequence table")
         sym = fb_data[pos]
         if sym > max_sym:
             raise ZstdError(f"{which} RLE symbol out of range")
@@ -554,7 +568,10 @@ def _decode_sequences(rest: bytes, state: dict):
 
 
 def _execute(out: bytearray, literals: bytes, seqs, rep: list[int],
-             max_output: int) -> None:
+             max_output: int, frame_start: int) -> None:
+    """Run one block's sequences. Matches may reach back only into
+    the current frame's output: every frame is decoded on its own, so
+    bytes of an earlier frame are outside its window."""
     lit_pos = 0
     for ll, ml, of_val in seqs:
         if of_val > 3:
@@ -585,7 +602,7 @@ def _execute(out: bytearray, literals: bytes, seqs, rep: list[int],
             raise ZstdError("sequence literals overrun")
         out += literals[lit_pos:lit_pos + ll]
         lit_pos += ll
-        if offset > len(out):
+        if offset > len(out) - frame_start:
             raise ZstdError("match offset beyond window")
         if len(out) + ml > max_output:
             raise ZstdError("output exceeds max_output")
@@ -615,6 +632,8 @@ def zstd_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
             if n - pos < 8:
                 raise ZstdError("truncated skippable frame")
             sz = int.from_bytes(data[pos + 4:pos + 8], "little")
+            if n - pos - 8 < sz:
+                raise ZstdError("skippable frame overruns the input")
             pos += 8 + sz
             continue
         if magic != MAGIC:
@@ -687,7 +706,7 @@ def zstd_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
                 pos += bsize
                 literals, used = _decode_literals(block, state)
                 seqs, _ = _decode_sequences(block[used:], state)
-                _execute(out, literals, seqs, rep, max_output)
+                _execute(out, literals, seqs, rep, max_output, frame_start)
             else:
                 raise ZstdError("reserved block type")
             if last:

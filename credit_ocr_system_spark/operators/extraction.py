@@ -34,28 +34,10 @@ from typing import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
-_BBOX = ("struct<x1:double,y1:double,x2:double,y2:double,"
-         "width:double,height:double>")
-
-EXTRACTED_SCHEMA = (
-    "url string, doc_kind string, page_count int, "
-    "extracted_text string, "
-    "spans array<struct<start:long,end:long,page:int>>, "
-    f"elements array<struct<elem_idx:int,page_num:int,text:string,"
-    f"confidence:double,bbox:{_BBOX}>>, "
-    f"pairs array<struct<pair_idx:int,label:string,value:string,page:int,"
-    f"confidence:double,pair_type:string,bounding_box:{_BBOX}>>, "
-    "n_elements int, n_pairs int, bytes_in bigint, kernel_us bigint, "
-    "link_canonical string, noindex boolean, "
-    "title string, published string, "
-    "base_href string, "
-    "links array<struct<link_idx:int,href:string,url:string,"
-    "anchor:string,nofollow:boolean>>, "
-    "metas array<struct<meta_idx:int,name:string,content:string>>, "
-    "error string"
-)
-
+from ..config.document_types import CREDIT_REQUEST_FIELDS
+from ..kernel.fields import clean_value
 
 _PA_BBOX = pa.struct([
     ("x1", pa.float64()), ("y1", pa.float64()),
@@ -63,8 +45,9 @@ _PA_BBOX = pa.struct([
     ("width", pa.float64()), ("height", pa.float64()),
 ])
 
-# Hand-built mirror of EXTRACTED_SCHEMA: workers have no SparkSession,
-# so the DDL string can't be parsed there.
+# The one definition of the stage's output schema: workers build
+# their batches against it, and the driver derives the Spark schema
+# from it (``_spark_schema``).
 PA_EXTRACTED_SCHEMA = pa.schema([
     ("url", pa.string()),
     ("doc_kind", pa.string()),
@@ -101,6 +84,28 @@ PA_EXTRACTED_SCHEMA = pa.schema([
     ("error", pa.string()),
 ])
 
+# The ``fields=True`` column: one struct per matched field, the same
+# columns and values as ``fields_native.fields_table`` rows minus
+# ``url``, taken from the kernel's own match and validation.
+PA_FIELD = pa.struct([
+    ("field_idx", pa.int32()),
+    ("field_name", pa.string()),
+    ("value", pa.string()),
+    ("confidence", pa.float64()),
+    ("page", pa.int32()),
+    ("bounding_box", _PA_BBOX),
+    ("source", pa.string()),
+    ("clean_str", pa.string()),
+    ("clean_num", pa.float64()),
+    ("clean_bool", pa.bool_()),
+    ("is_valid", pa.bool_()),
+    ("errors", pa.list_(pa.string())),
+])
+
+_CLEAN_COLUMN = {"string": "clean_str", "date": "clean_str",
+                 "currency": "clean_num", "area": "clean_num",
+                 "number": "clean_num", "boolean": "clean_bool"}
+
 _EMPTY_RESULT = {
     "doc_kind": "error", "page_count": 0, "extracted_text": "",
     "spans": [], "elements": [], "pairs": [],
@@ -123,19 +128,60 @@ def _guard_disabled_by_env() -> bool:
         "COS_SPARK_DISABLE_BATCH_ERROR_GUARD", "") == "1"
 
 
-def _arrow_schema() -> pa.Schema:
-    return PA_EXTRACTED_SCHEMA
+def _arrow_schema(fields: bool = False) -> pa.Schema:
+    if not fields:
+        return PA_EXTRACTED_SCHEMA
+    schema = PA_EXTRACTED_SCHEMA.remove(
+        PA_EXTRACTED_SCHEMA.get_field_index("elements"))
+    return schema.append(pa.field("fields", pa.list_(PA_FIELD)))
+
+
+def _spark_schema(fields: bool = False):
+    return from_arrow_schema(_arrow_schema(fields))
+
+
+def _field_rows(res: dict) -> list[dict]:
+    """The kernel's matched fields as ``PA_FIELD`` rows, in spec
+    order (error rows carry no ``extracted_fields``: none)."""
+    hits = res.get("extracted_fields")
+    if not hits:
+        return []
+    checks = res["validation_results"]
+    out = []
+    for idx, spec in enumerate(CREDIT_REQUEST_FIELDS):
+        hit = hits.get(spec.name)
+        if hit is None:
+            continue
+        row = {
+            "field_idx": idx, "field_name": spec.name,
+            "value": hit["value"], "confidence": hit["confidence"],
+            "page": hit["page"], "bounding_box": hit["bounding_box"],
+            "source": hit["source"],
+            "is_valid": checks[spec.name]["is_valid"],
+            "errors": checks[spec.name]["errors"],
+        }
+        column = _CLEAN_COLUMN[spec.clean_type]
+        clean = clean_value(hit["value"], spec.clean_type)
+        if column == "clean_num" and clean is not None:
+            try:
+                clean = float(clean)
+            except OverflowError:  # a digit run past double range
+                clean = None
+        row[column] = clean
+        out.append(row)
+    return out
 
 
 def _extract_batches(
         batches: Iterator[pa.RecordBatch],
-        guard_off: bool | None = None) -> Iterator[pa.RecordBatch]:
+        guard_off: bool | None = None,
+        fields: bool = False) -> Iterator[pa.RecordBatch]:
     # Once-per-worker initialization (iterator-UDF prologue).
     from credit_ocr_system_spark.kernel.extract import extract_document
 
     if guard_off is None:
         guard_off = _guard_disabled_by_env()
-    schema = _arrow_schema()
+    schema = _arrow_schema(fields)
     for batch in batches:
         urls = batch.column("url").to_pylist()
         payloads = batch.column("html").to_pylist()
@@ -154,18 +200,12 @@ def _extract_batches(
                 err = f"{type(ex).__name__}: {ex}"[:500]
                 n_errors += 1
             elapsed_us = (time.perf_counter_ns() - t0) // 1000
-            rows.append({
+            row = {
                 "url": url,
                 "doc_kind": res["doc_kind"],
                 "page_count": res["page_count"],
                 "extracted_text": res["extracted_text"],
                 "spans": res["spans"],
-                "elements": [
-                    {"elem_idx": i, "page_num": e["page_num"],
-                     "text": e["text"], "confidence": e["confidence"],
-                     "bbox": e["bbox"]}
-                    for i, e in enumerate(res["elements"])
-                ],
                 "pairs": [
                     {"pair_idx": i, "label": p["label"],
                      "value": p["value"], "page": p["page"],
@@ -186,7 +226,17 @@ def _extract_batches(
                 "links": res.get("links", []),
                 "metas": res.get("metas", []),
                 "error": err,
-            })
+            }
+            if fields:
+                row["fields"] = _field_rows(res)
+            else:
+                row["elements"] = [
+                    {"elem_idx": i, "page_num": e["page_num"],
+                     "text": e["text"], "confidence": e["confidence"],
+                     "bbox": e["bbox"]}
+                    for i, e in enumerate(res["elements"])
+                ]
+            rows.append(row)
         if (not guard_off and n_errors == len(rows)
                 and n_errors >= _BATCH_GUARD_MIN_ROWS):
             raise RuntimeError(
@@ -197,19 +247,26 @@ def _extract_batches(
         yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
+def extract_pages(pages: DataFrame, *, fields: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extraction rows.
 
     Column pruning: only ``url`` and ``html`` cross the Arrow boundary
     — selecting first lets Parquet/Iceberg drop the other columns at
     the scan.
+
+    ``fields=True`` ships ``fields``, the kernel's matched, cleaned and
+    validated fields per document (``PA_FIELD``), in place of the
+    per-line ``elements`` they were matched from: a consumer needs no
+    second match pass, and the largest column after the payload text
+    stays out of the Arrow batches.
     """
     # capture the escape hatch on the DRIVER; the bool travels to
     # executors inside the serialized closure
     guard_off = _guard_disabled_by_env()
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _extract_batches(batches, guard_off=guard_off)
+        return _extract_batches(batches, guard_off=guard_off,
+                                fields=fields)
 
     return pages.select("url", "html").mapInArrow(
-        run, schema=EXTRACTED_SCHEMA)
+        run, schema=_spark_schema(fields))

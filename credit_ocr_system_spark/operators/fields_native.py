@@ -12,6 +12,23 @@ semantics are relational (SURVEY.md §2.4 J1-J3, §2.2 P10-P20):
   with pair matches (J1) ranked before line-fallback matches (J2);
 * cleaning/validation are pure column expressions — whole-stage
   codegen, zero Python in the hot path.
+
+This is the driver queries' operator. The extraction job commits the
+kernel's own fields instead (``extract_pages(..., fields=True)``,
+``plans.pipeline.kernel_fields``), because these expressions read some
+values differently from ``kernel/fields.py`` and so from the
+reference ``validation.py`` it mirrors:
+
+* ``"1_999"`` as a number: Python ``float()`` accepts the underscore,
+  so the kernel finds it valid; ``try_cast`` fails and this tail
+  reports ``"Value must be a number"``.
+* ``"١٢٣"`` (Arabic-Indic digits): ``str.isdigit()`` keeps them and
+  the kernel's ``clean_num`` is 123; ``[^0-9]`` strips them and this
+  tail's is null.
+* ``"\tACME GmbH\xa0"``: ``str.strip()`` drops the tab and the NBSP;
+  Spark ``trim`` strips only spaces, so this tail keeps both.
+* ``""``: the kernel cleans an empty value to null; this tail's
+  ``clean_str`` is ``""`` (and ``clean_bool`` is false).
 """
 
 from __future__ import annotations

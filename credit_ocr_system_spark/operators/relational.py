@@ -749,18 +749,19 @@ CMS_SAMPLE_HEX = ("0", "1", "2")
 HOT_ONE_IN = 160
 
 
-def _cms_cells(key, depth: int, width: int):
-    """The CMS cell coordinates of ``key``: one (d, slot) struct per
-    sketch row, slot = portable hex-bucket of md5('<d>:' || key).
-    Identical ascii arithmetic runs in the DuckDB oracle."""
-    from .textops import _hex_bucket
+def _cms_cells(key: str, depth: int, width: int):
+    """The CMS cell coordinates of string column ``key``: one (d, slot)
+    struct per sketch row, slot = portable hex-bucket of
+    md5('<d>:' || key). Identical ascii arithmetic runs in the DuckDB
+    oracle. Built from SQL text: the same expression through the
+    Column API took ~200 JVM calls per use, ~0.2 s of driver time."""
+    from .textops import _hex_bucket_sql
 
-    return F.array(*[
-        F.struct(
-            F.lit(d).alias("d"),
-            _hex_bucket(
-                F.md5(F.concat(F.lit(f"{d}:"), key)), width).alias("slot"))
-        for d in range(depth)])
+    cells = []
+    for d in range(depth):
+        slot = _hex_bucket_sql(f"md5(concat('{d}:', `{key}`))", width)
+        cells.append(f"named_struct('d', {d}, 'slot', {slot})")
+    return F.expr(f"array({', '.join(cells)})")
 
 
 def detect_hot_keys(df: DataFrame, key_expr, rec_id_expr,
@@ -784,7 +785,7 @@ def detect_hot_keys(df: DataFrame, key_expr, rec_id_expr,
                      rec_id_expr.cast("string").alias("rec_id"))
 
     cells = (
-        base.select(F.explode(_cms_cells(F.col("key"), depth, width))
+        base.select(F.explode(_cms_cells("key", depth, width))
                     .alias("c"))
         .groupBy(F.col("c.d").alias("d"), F.col("c.slot").alias("slot"))
         .agg(F.count("*").alias("cnt")))
@@ -798,7 +799,7 @@ def detect_hot_keys(df: DataFrame, key_expr, rec_id_expr,
         .select("key").distinct())
 
     probe = cands.select(
-        "key", F.explode(_cms_cells(F.col("key"), depth, width)).alias("c")
+        "key", F.explode(_cms_cells("key", depth, width)).alias("c")
     ).select("key", F.col("c.d").alias("d"), F.col("c.slot").alias("slot"))
 
     est = (probe.join(F.broadcast(cells), ["d", "slot"])

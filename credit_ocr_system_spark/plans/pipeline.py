@@ -2,9 +2,12 @@
 
 The full plan (SURVEY.md §3.2) is a single Catalyst plan per run::
 
-    pages ──repartition(salted url hash)──► mapInPandas(kernel)
-          ──► fields (broadcast join tail) + lineage sidecar
-          ──► snapshot-atomic write
+    pages ──repartition(salted url hash)──► mapInArrow(kernel)
+          ──► cache (text, pairs, the kernel's matched + validated
+              fields; no per-line elements)
+          ──► extracted | fields (explode) | lineage | hot_keys
+              (CMS guard over the cached urls) | doc_status (MERGE)
+          ──► snapshot-atomic writes
 
 Scale mechanics (north_rule):
 
@@ -20,6 +23,9 @@ Scale mechanics (north_rule):
   never recomputes or duplicates a document.
 * **Lineage.** Every commit also writes per-partition lineage rows
   (counts, bytes, kernel wall time, url range) to the sidecar.
+* **One kernel pass, one count.** Every sink reads the cached kernel
+  output; the doc and field counts come from one aggregate, the
+  hot-domain count from an ``Observation`` on its write.
 """
 
 from __future__ import annotations
@@ -31,11 +37,11 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extraction import extract_pages
-from ..operators.fields_native import fields_table, field_config_df
 from ..operators.metrics import partition_lineage
 
 
@@ -101,10 +107,40 @@ class SnapshotSink:
         self.manifest = os.path.join(root, "_manifest.jsonl")
 
     def committed_snapshots(self) -> list[dict]:
+        """Manifest entries in commit order. A final line that does
+        not parse is an append torn by a crash: that commit never
+        happened, so it is skipped. A bad line followed by good ones
+        is corruption, not a crash, and raises."""
         if not os.path.exists(self.manifest):
             return []
         with open(self.manifest, encoding="utf-8") as fh:
-            return [json.loads(line) for line in fh if line.strip()]
+            lines = [line for line in fh if line.strip()]
+        snaps = []
+        for i, line in enumerate(lines):
+            try:
+                snaps.append(json.loads(line))
+            except json.JSONDecodeError:
+                if i < len(lines) - 1:
+                    raise
+        return snaps
+
+    def _end_torn_tail(self) -> None:
+        """Before an append: make the manifest end in a newline, so a
+        torn final line cannot swallow the next commit. A tail that
+        parses lost only its newline; one that does not is cut."""
+        if not os.path.exists(self.manifest):
+            return
+        with open(self.manifest, "rb+") as fh:
+            data = fh.read()
+            if not data or data.endswith(b"\n"):
+                return
+            cut = data.rfind(b"\n") + 1
+            try:
+                json.loads(data[cut:])
+            except ValueError:
+                fh.truncate(cut)
+            else:
+                fh.write(b"\n")
 
     def _visible(self, as_of: str | None = None) -> list[dict]:
         """Snapshots visible in the view at ``as_of`` (inclusive;
@@ -182,6 +218,7 @@ class SnapshotSink:
                  "partition_spec": list(partition_by or []),
                  "committed_at": time.time(), **(meta or {})}
         # The append+flush of one manifest line is the atomic commit.
+        self._end_torn_tail()
         with open(self.manifest, "a", encoding="utf-8") as fh:
             fh.write(json.dumps(entry) + "\n")
         return snap_dir
@@ -634,6 +671,21 @@ def maybe_compact(spark: SparkSession, run_id: str,
     return out
 
 
+def kernel_fields(extracted: DataFrame) -> DataFrame:
+    """The ``fields`` sink rows: the kernel-built ``fields`` arrays of
+    ``extract_pages(..., fields=True)`` exploded, one row per (url,
+    matched field) — no join, no window.
+
+    Rebalanced and sorted by (url, field_idx): a plain explode writes
+    one unsorted file per salted partition, which compresses worse
+    than the url-sorted few files AQE coalesces the rebalance into."""
+    return (extracted
+            .select("url", F.explode("fields").alias("f"))
+            .select("url", "f.*")
+            .hint("rebalance")
+            .sortWithinPartitions("url", "field_idx"))
+
+
 def detect_hot_domains(pages: DataFrame) -> DataFrame:
     """CMS heavy-hitter detection over the batch's url hosts — the
     skew guard in front of the extraction job (VERDICT r4 item #7).
@@ -677,8 +729,53 @@ def run_extraction_job(
     mirroring the snapshot deltas, and a resumed (skipped) run writes
     nothing, so re-running never duplicates records. ``wat_dir``
     does the same for the link/head metadata as ``.warc.wat.gz``
-    (``sources/warc.py::write_wat``) — the WARC/WET/WAT triple."""
+    (``sources/warc.py::write_wat``) — the WARC/WET/WAT triple.
+
+    Besides the commit counts (``n_docs``, ``n_fields``,
+    ``n_hot_domains``, ``n_wet``/``n_wat``) the stats carry the call's
+    own record: ``action_s``, the wall seconds of each Spark action
+    (``count``, ``write.<sink>``, ``merge.doc_status``), and
+    ``spark_jobs``, the Spark jobs the call launched (counted by a
+    job tag)."""
     run_id = uuid.uuid4().hex[:12]
+    sc = spark.sparkContext
+    # a tag, not a job group: the caller's group stays in place
+    tag = f"extraction-job-{run_id}"
+    sc.addJobTag(tag)
+    actions: dict[str, float] = {}
+    try:
+        stats = _extraction_run(spark, pages, output_root, run_id,
+                                num_partitions, salt, wet_dir, wat_dir,
+                                detect_hot, actions)
+    finally:
+        sc.removeJobTag(tag)
+    stats["action_s"] = actions
+    stats["spark_jobs"] = _tagged_job_count(spark, tag)
+    return stats
+
+
+def _tagged_job_count(spark: SparkSession, tag: str) -> int:
+    """Spark jobs launched under ``tag``, once the status listener has
+    seen every event posted so far."""
+    jsc = spark.sparkContext._jsc.sc()
+    try:
+        jsc.listenerBus().waitUntilEmpty(10_000)
+    except Py4JJavaError:  # listener still busy: count what it has seen
+        pass
+    return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def _extraction_run(spark, pages, output_root, run_id, num_partitions,
+                    salt, wet_dir, wat_dir, detect_hot,
+                    actions: dict[str, float]) -> dict:
+    """The body of :func:`run_extraction_job`; records the wall
+    seconds of each Spark action in ``actions``."""
+    def timed(name, fn):
+        t0 = time.perf_counter()
+        out = fn()
+        actions[name] = time.perf_counter() - t0
+        return out
+
     sink_extracted = SnapshotSink(os.path.join(output_root, "extracted"))
     sink_fields = SnapshotSink(os.path.join(output_root, "fields"))
     sink_lineage = SnapshotSink(os.path.join(output_root, "lineage"))
@@ -689,37 +786,43 @@ def run_extraction_job(
                          sink_extracted.read_committed(spark))
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    hot = detect_hot_domains(todo) if detect_hot else None
     todo = repartition_salted(todo, num_partitions, salt)
 
-    extracted = extract_pages(todo)
-    # One kernel pass feeds three sinks: cache the (much smaller)
-    # extraction output, not the input pages.
-    extracted = extracted.persist()
+    # One kernel pass feeds every sink: cache its output with the
+    # kernel's fields in place of ``elements``, which no sink reads.
+    extracted = extract_pages(todo, fields=True).persist()
     try:
-        n_docs = extracted.count()
+        counts = timed("count", lambda: extracted.agg(
+            F.count("*").alias("docs"),
+            F.sum(F.size("fields")).alias("fields")).first())
+        n_docs = counts.docs
         if n_docs == 0:
             return {"run_id": run_id, "n_docs": 0, "skipped": True}
-        fields = fields_table(extracted, field_config_df(spark))
+        n_fields = counts.fields
+        fields = kernel_fields(extracted)
         lineage = partition_lineage(extracted, run_id)
 
-        sink_extracted.write_snapshot(
-            extracted.drop("elements"), run_id, {"n_docs": n_docs})
-        n_fields = fields.count()
-        sink_fields.write_snapshot(fields, run_id, {"n_rows": n_fields})
-        sink_lineage.write_snapshot(lineage, run_id)
-        if hot is not None:
+        timed("write.extracted", lambda: sink_extracted.write_snapshot(
+            extracted.drop("fields"), run_id, {"n_docs": n_docs}))
+        timed("write.fields", lambda: sink_fields.write_snapshot(
+            fields, run_id, {"n_rows": n_fields}))
+        timed("write.lineage", lambda: sink_lineage.write_snapshot(
+            lineage, run_id))
+        n_hot = None
+        if detect_hot:
             # Skew-guard sidecar: detected hot domains for THIS run's
             # batch (empty snapshot = clean batch, still recorded so
-            # the absence of skew is auditable, not assumed).
-            hot_rows = (hot.filter(F.col("is_hot"))
-                        .withColumn("run_id", F.lit(run_id)))
-            sink_hotkeys.write_snapshot(hot_rows, run_id)
-            n_hot = (sink_hotkeys.read_snapshot(spark, run_id)
-                     .count())
-            stats_hot = n_hot
-        else:
-            stats_hot = None
+            # the absence of skew is auditable, not assumed). The
+            # cached output holds exactly the batch's urls, so the
+            # guard reads no input a second time.
+            seen = Observation()
+            hot_rows = (detect_hot_domains(extracted)
+                        .filter(F.col("is_hot"))
+                        .withColumn("run_id", F.lit(run_id))
+                        .observe(seen, F.count(F.lit(1)).alias("n")))
+            timed("write.hot_keys", lambda: sink_hotkeys.write_snapshot(
+                hot_rows, run_id))
+            n_hot = seen.get["n"]
         # doc_status is keyed state, not an event log: a re-extracted
         # url must UPDATE its row (reference MERGE semantics,
         # src/dms/adapters.py:130-167), so the status sink upserts.
@@ -734,11 +837,12 @@ def run_extraction_job(
                                 "run_id")).alias("m"))
             .select("url", "m.status", "m.doc_kind", "m.error",
                     "m.run_id"))
-        sink_status.merge_upsert(spark, status, run_id, keys=["url"])
+        timed("merge.doc_status", lambda: sink_status.merge_upsert(
+            spark, status, run_id, keys=["url"]))
         stats = {"run_id": run_id, "n_docs": n_docs,
                  "n_fields": n_fields, "skipped": False}
-        if stats_hot is not None:
-            stats["n_hot_domains"] = stats_hot
+        if n_hot is not None:
+            stats["n_hot_domains"] = n_hot
         if wet_dir is not None:
             from ..sources.warc import write_wet
 
@@ -748,9 +852,9 @@ def run_extraction_job(
             docs = (extracted.filter(F.col("error").isNull())
                     .select("url", "extracted_text")
                     .join(todo.select("url", "warc_ts"), "url"))
-            stats["n_wet"] = write_wet(
+            stats["n_wet"] = timed("write.wet", lambda: write_wet(
                 docs.select("url", "warc_ts", "extracted_text"),
-                os.path.join(wet_dir, run_id))
+                os.path.join(wet_dir, run_id)))
         if wat_dir is not None:
             from ..sources.warc import write_wat
 
@@ -758,8 +862,8 @@ def run_extraction_job(
                     .select("url", "doc_kind", "title", "base_href",
                             "link_canonical", "links", "metas")
                     .join(todo.select("url", "warc_ts"), "url"))
-            stats["n_wat"] = write_wat(
-                docs, os.path.join(wat_dir, run_id))
+            stats["n_wat"] = timed("write.wat", lambda: write_wat(
+                docs, os.path.join(wat_dir, run_id)))
         return stats
     finally:
         extracted.unpersist()

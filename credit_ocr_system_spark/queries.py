@@ -44,6 +44,7 @@ from .operators.textops import (
     SIMHASH_BANDS,
     SIMHASH_BITS,
     SIMHASH_MAX_HAMMING,
+    _hex_bucket_sql,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -819,18 +820,6 @@ def _c4_keep_sql(keptl: str, clean: str, text: str) -> str:
             "length(translate(" + clean + ", '.!?', '')) >= 3 "
             "AND NOT contains(lower(" + text + "), 'lorem ipsum') "
             "AND NOT contains(" + text + ", '{'))")
-
-
-def _hex_bucket_sql(col: str, n_buckets: int) -> str:
-    # The SQL twin of textops._hex_bucket: first 4 hex chars ->
-    # bucket, via the identical ascii arithmetic.
-    v = "0"
-    for i in range(1, 5):
-        hv = (f"(ascii(substr({col}, {i}, 1)) - 48 - "
-              f"CASE WHEN ascii(substr({col}, {i}, 1)) >= 97 "
-              f"THEN 39 ELSE 0 END)")
-        v = f"({v} * 16 + {hv})"
-    return f"CAST({v} % {n_buckets} AS INT)"
 
 
 def _simhash_oracle() -> str:

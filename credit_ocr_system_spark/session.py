@@ -68,7 +68,11 @@ def build_session(app_name: str = "credit-ocr-system-spark",
     * Arrow on for pandas-UDF exchange; small Arrow batches because
       rows carry whole page payloads (binary ``html``) — batch bytes,
       not batch rows, is the executor-memory bound (SURVEY.md §4);
-    * UTC session timezone so timestamps hash identically everywhere.
+    * UTC session timezone so timestamps hash identically everywhere;
+    * a codegen class cache big enough for the job's plans: the default
+      100 entries is less than one extraction job plus a few queries
+      compile, so least-recently-used eviction made every repeated job
+      recompile the ~35 classes its previous run had already built.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -88,6 +92,7 @@ def build_session(app_name: str = "credit-ocr-system-spark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # persistent bucketed tables (plans/bucketed.py) land in the

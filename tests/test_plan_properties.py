@@ -574,3 +574,57 @@ def test_annotation_png_adds_no_exchange(spark, pages_path):
     plan = plan_of(annotation_png(extract_pages(pages)))
     assert plan.count("MapInArrow") == 4  # two nodes: tree + detail
     assert "Exchange" not in plan
+
+
+def plan_nodes(df) -> list[str]:
+    """Physical operator class names of ``df``'s plan, above any cache:
+    an InMemoryTableScan is a leaf, the cached plan is not walked."""
+    names, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.getClass().getSimpleName())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+@pytest.fixture(scope="module")
+def job_frames(spark, pages_path, tmp_path_factory):
+    """Physical operators of the frames ``run_extraction_job`` builds
+    over its cached extraction output, caught while the job runs."""
+    from credit_ocr_system_spark.plans import pipeline
+
+    frames = {}
+    patch = pytest.MonkeyPatch()
+    for name in ("kernel_fields", "detect_hot_domains"):
+        def spy(*args, _fn=getattr(pipeline, name), _name=name):
+            df = _fn(*args)
+            frames[_name] = plan_nodes(df)
+            return df
+        patch.setattr(pipeline, name, spy)
+    try:
+        pipeline.run_extraction_job(
+            spark, spark.read.parquet(pages_path),
+            str(tmp_path_factory.mktemp("job")), num_partitions=2)
+    finally:
+        patch.undo()
+    return frames
+
+
+def test_job_fields_are_an_explode_of_the_cache(job_frames):
+    # the kernel pass already matched and validated every field: the
+    # sink is the cached output exploded — no config join, no top-1
+    nodes = job_frames["kernel_fields"]
+    assert "GenerateExec" in nodes
+    assert not [n for n in nodes if "Join" in n or "Window" in n]
+    assert nodes.count("InMemoryTableScanExec") == 1
+    assert "FileSourceScanExec" not in nodes
+
+
+def test_job_hot_domain_guard_reads_the_cache(job_frames):
+    # the guard counts hosts of the cached extraction output, never a
+    # second scan of the input pages
+    nodes = job_frames["detect_hot_domains"]
+    leaves = {n for n in nodes if n.endswith("ScanExec")}
+    assert leaves == {"InMemoryTableScanExec"}
+    assert "FileSourceScanExec" not in nodes

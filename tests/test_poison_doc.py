@@ -87,3 +87,43 @@ def test_small_all_error_batch_still_degrades(monkeypatch):
     ])
     rows = list(extraction._extract_batches(iter([batch])))[0].to_pylist()
     assert all(r["error"] is not None for r in rows)
+
+
+def test_error_row_has_no_fields(monkeypatch):
+    """With the kernel's fields requested, a poison doc's error row
+    carries an empty ``fields`` list; its neighbours keep theirs."""
+    real = kernel_extract.extract_document
+
+    def bomb(url, payload):
+        if url == "https://bad.example/poison":
+            raise ValueError("synthetic kernel bug")
+        return real(url, payload)
+
+    monkeypatch.setattr(kernel_extract, "extract_document", bomb)
+    batch = _batch([
+        {"url": "https://ok.example/a",
+         "html": b"<table><tr><td>Company Name</td>"
+                 b"<td>ACME GmbH</td></tr></table>"},
+        {"url": "https://bad.example/poison", "html": b"<p>x</p>"},
+    ])
+    out = list(extraction._extract_batches(iter([batch]), fields=True))
+    rows = {r["url"]: r for r in out[0].to_pylist()}
+    assert "elements" not in rows["https://ok.example/a"]
+    assert rows["https://bad.example/poison"]["fields"] == []
+    ok = rows["https://ok.example/a"]["fields"]
+    assert [(f["field_name"], f["value"], f["clean_str"]) for f in ok] \
+        == [("company_name", "ACME GmbH", "ACME GmbH")]
+
+
+def test_number_past_double_range_cleans_to_null():
+    """``clean_value`` keeps every digit of a number as a Python int;
+    one past double range must clean to null, not fail the batch."""
+    digits = "1" * 400
+    batch = _batch([{
+        "url": "https://ok.example/long",
+        "html": (f"<table><tr><td>Construction Year</td><td>{digits}"
+                 f"</td></tr></table>").encode()}])
+    out = list(extraction._extract_batches(iter([batch]), fields=True))
+    (field,) = out[0].to_pylist()[0]["fields"]
+    assert field["field_name"] == "construction_year"
+    assert field["value"] == digits and field["clean_num"] is None

@@ -303,3 +303,39 @@ def test_expire_aligns_cut_to_replace_boundary(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(KeyError):
         sink.read_committed(spark, as_of="a0")
+
+
+def test_torn_manifest_tail_is_skipped_and_cut(spark, tmp_path):
+    """A crash during the manifest append leaves a half-written last
+    line: that commit never happened. Reads skip it, the next commit
+    cuts it, and a bad line with good ones after it still raises."""
+    import json
+
+    import pytest
+    sink = SnapshotSink(str(tmp_path / "torn"))
+    sink.write_snapshot(_status_df(spark, [("u1", "a")]), "r1")
+    with open(sink.manifest, "a", encoding="utf-8") as fh:
+        fh.write('{"dir": "snap-r2", "run_')
+    assert [s["run_id"] for s in sink.committed_snapshots()] == ["r1"]
+    assert _by_url(sink.read_committed(spark)) == {"u1": "a"}
+
+    sink.write_snapshot(_status_df(spark, [("u3", "c")]), "r3")
+    assert [s["run_id"] for s in sink.committed_snapshots()] == \
+        ["r1", "r3"]
+    assert _by_url(sink.read_committed(spark)) == {"u1": "a", "u3": "c"}
+
+    # a complete entry that lost only its newline stays committed
+    with open(sink.manifest, encoding="utf-8") as fh:
+        lines = fh.readlines()
+    with open(sink.manifest, "w", encoding="utf-8") as fh:
+        fh.writelines(lines[:-1] + [lines[-1].rstrip("\n")])
+    sink.write_snapshot(_status_df(spark, [("u4", "d")]), "r4")
+    assert [s["run_id"] for s in sink.committed_snapshots()] == \
+        ["r1", "r3", "r4"]
+
+    with open(sink.manifest, encoding="utf-8") as fh:
+        lines = fh.readlines()
+    with open(sink.manifest, "w", encoding="utf-8") as fh:
+        fh.writelines(lines[:1] + ['{"dir": "snap-\n'] + lines[1:])
+    with pytest.raises(json.JSONDecodeError):
+        sink.committed_snapshots()

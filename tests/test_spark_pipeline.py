@@ -190,3 +190,99 @@ def test_resume_is_idempotent(spark, tmp_path):
 def test_resume_filter_without_committed_is_passthrough(spark):
     pages = pages_df(spark, 10, partitions=2)
     assert resume_filter(pages, None) is pages
+
+
+# Values the native field tail reads differently from the kernel (and
+# so from the reference validation.py the kernel mirrors); both survive
+# HTML extraction. The job commits the kernel's reading.
+_EDGE_ROWS = [("Construction Year", "1_999"),   # float() accepts "_"
+              ("Purchase Price", "١٢٣"),        # Arabic-Indic digits
+              ("Company Name", "ACME GmbH")]
+
+
+def _edge_page():
+    cells = "".join(f"<tr><td>{a}</td><td>{b}</td></tr>"
+                    for a, b in _EDGE_ROWS)
+    return ("https://edge.example/fields",
+            f"<html><body><table>{cells}</table></body></html>"
+            .encode())
+
+
+def _kernel_field_rows(url, payload):
+    """The 13-column fields rows, built from ``extract_document``."""
+    from credit_ocr_system_spark.config.document_types import (
+        CREDIT_REQUEST_FIELDS)
+    from credit_ocr_system_spark.kernel.fields import clean_value
+
+    doc = extract_document(url, payload)
+    rows = set()
+    for idx, spec in enumerate(CREDIT_REQUEST_FIELDS):
+        hit = doc["extracted_fields"].get(spec.name)
+        if hit is None:
+            continue
+        clean = clean_value(hit["value"], spec.clean_type)
+        check = doc["validation_results"][spec.name]
+        bbox = hit["bounding_box"]
+        rows.add((
+            url, idx, spec.name, hit["value"], hit["confidence"],
+            hit["page"],
+            tuple(bbox[k] for k in ("x1", "y1", "x2", "y2", "width",
+                                    "height")),
+            hit["source"],
+            clean if spec.clean_type in ("string", "date") else None,
+            (float(clean) if clean is not None else None)
+            if spec.clean_type in ("currency", "area", "number")
+            else None,
+            clean if spec.clean_type == "boolean" else None,
+            check["is_valid"], tuple(check["errors"])))
+    return rows
+
+
+def test_committed_fields_equal_kernel_on_edge_values(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    gen = pages_df(spark, 40, partitions=2)
+    url, payload = _edge_page()
+    edge = spark.createDataFrame(
+        [(url, None, payload, "", "en")], schema=gen.schema)
+    pages = gen.unionByName(edge)
+    out = str(tmp_path / "out")
+    stats = run_extraction_job(spark, pages, out, num_partitions=4)
+
+    committed = SnapshotSink(os.path.join(out, "fields")) \
+        .read_committed(spark)
+    got = {(r.url, r.field_idx, r.field_name, r.value, r.confidence,
+            r.page, tuple(r.bounding_box), r.source, r.clean_str,
+            r.clean_num, r.clean_bool, r.is_valid, tuple(r.errors))
+           for r in committed.collect()}
+    want = _kernel_field_rows(url, payload)
+    for i in range(40):
+        page = gen_page(i)
+        want |= _kernel_field_rows(page["url"], page["html"])
+    assert got == want
+    assert stats["n_fields"] == committed.count() == len(want)
+
+    by_name = {r.field_name: r for r in committed
+               .where(F.col("url") == url).collect()}
+    assert by_name["construction_year"].is_valid
+    assert by_name["construction_year"].clean_num == 1999.0
+    assert by_name["purchase_price"].clean_num == 123.0
+
+
+def test_job_records_its_actions_without_taking_the_job_group(
+        spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller's own group")
+    try:
+        stats = run_extraction_job(spark, pages_df(spark, 20, partitions=2),
+                                   str(tmp_path / "out"), num_partitions=2)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        caller_jobs = sc.statusTracker().getJobIdsForGroup("caller-group")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(stats["action_s"]) == {
+        "count", "write.extracted", "write.fields", "write.lineage",
+        "write.hot_keys", "merge.doc_status"}
+    assert all(s > 0 for s in stats["action_s"].values())
+    # every job of the call ran under the caller's group as well
+    assert 0 < stats["spark_jobs"] <= len(caller_jobs)

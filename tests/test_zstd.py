@@ -11,7 +11,10 @@ Same evidence pattern as the brotli codec:
   AND here;
 * **robustness**: random garbage and every truncation of a valid
   frame raise ZstdError only; the max_output zip-bomb guard trips;
-  dictionary frames raise with the feature named.
+  dictionary frames raise with the feature named; crafted hostile
+  frames (Huffman weight above 11, truncated RLE sequence table,
+  a match reaching into the previous frame, an overrunning skippable
+  frame) fail closed with ZstdError.
 """
 
 import ctypes
@@ -163,3 +166,62 @@ def test_dictionary_frames_named():
     frame = (0xFD2FB528).to_bytes(4, "little") + bytes([0x21, 7])
     with pytest.raises(ZstdError, match="[Dd]ictionary"):
         zstd_decompress(frame + b"\x01\x00\x00")
+
+
+# --- crafted hostile frames: each must fail closed with ZstdError ------
+
+_MAGIC = (0xFD2FB528).to_bytes(4, "little")
+
+
+def _frame(content_size, block):
+    """Single-segment frame, 1-byte content size, one last compressed
+    block."""
+    bh = (len(block) << 3) | (2 << 1) | 1
+    return (_MAGIC + bytes([0x20, content_size])
+            + bh.to_bytes(3, "little") + block)
+
+
+def _huffman_literal_frame(weight):
+    """One Huffman-coded literal (symbol 0) behind a direct-weights
+    tree whose single explicit weight is ``weight``; no sequences."""
+    payload = bytes([128, weight << 4]) + b"\x02"  # tree + 1-bit stream
+    joint = 1 | (len(payload) << 10)               # regen 1, 1 stream
+    lit_hdr = bytes([2 | (joint & 0xF) << 4, (joint >> 4) & 0xFF,
+                     (joint >> 12) & 0xFF])
+    return _frame(1, lit_hdr + payload + b"\x00")
+
+
+def _one_match_block(literals):
+    """Raw ``literals`` then one sequence — all three tables in RLE
+    mode: literal length len(literals), offset 4, match length 4."""
+    return (bytes([len(literals) << 3]) + literals
+            + bytes([1, 0x54, len(literals), 2, 1, 0x07]))
+
+
+def test_huffman_weight_above_11_rejected():
+    assert zstd_decompress(_huffman_literal_frame(1)) == b"\x00"
+    with pytest.raises(ZstdError, match="11-bit maximum"):
+        zstd_decompress(_huffman_literal_frame(12))
+
+
+def test_truncated_rle_sequence_table_rejected():
+    # one sequence, literal-length table in RLE mode, symbol byte cut
+    with pytest.raises(ZstdError, match="RLE sequence table"):
+        zstd_decompress(_frame(0, bytes([0x00, 0x01, 0x40])))
+
+
+def test_match_offset_cannot_reach_into_previous_frame():
+    assert zstd_decompress(_frame(8, _one_match_block(b"abcd"))) \
+        == b"abcdabcd"
+    # the same match, but the 4 bytes it points at belong to frame 1
+    stream = zstd_compress_store(b"abcd") + _frame(4, _one_match_block(b""))
+    with pytest.raises(ZstdError, match="beyond window"):
+        zstd_decompress(stream)
+
+
+def test_skippable_frame_overrunning_input_rejected():
+    skip = bytes.fromhex("502a4d18") + (100).to_bytes(4, "little")
+    with pytest.raises(ZstdError, match="skippable"):
+        zstd_decompress(skip + b"abc")
+    with pytest.raises(ZstdError, match="skippable"):
+        zstd_decompress(zstd_compress_store(b"x") + skip + b"abc")
