@@ -27,7 +27,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Iterator
 
@@ -111,21 +110,11 @@ _EMPTY_RESULT = {
     "spans": [], "elements": [], "pairs": [],
 }
 
-# Poison-doc guard escape hatch: a single bad document must degrade to
-# an error row, but a batch of >= this many rows where EVERY row
-# errors is a systemic kernel regression (ImportError, schema bug,
-# ...) — the job must fail fast, not "succeed" with 100% error rows.
-# Set COS_SPARK_DISABLE_BATCH_ERROR_GUARD=1 (on the DRIVER — the
-# value is captured when extract_pages() builds the UDF and ships to
-# executors in its closure, so it works on a real cluster where
-# executor environments differ) for corpora where wholly-broken
-# shards are expected.
+# Batch error guard: a single bad document must degrade to an error
+# row, but a batch of >= this many rows where EVERY row errors is a
+# systemic kernel regression (ImportError, schema bug, ...) — the job
+# must fail fast, not "succeed" with 100% error rows.
 _BATCH_GUARD_MIN_ROWS = 32
-
-
-def _guard_disabled_by_env() -> bool:
-    return os.environ.get(
-        "COS_SPARK_DISABLE_BATCH_ERROR_GUARD", "") == "1"
 
 
 def _arrow_schema(fields: bool = False) -> pa.Schema:
@@ -174,13 +163,10 @@ def _field_rows(res: dict) -> list[dict]:
 
 def _extract_batches(
         batches: Iterator[pa.RecordBatch],
-        guard_off: bool | None = None,
         fields: bool = False) -> Iterator[pa.RecordBatch]:
     # Once-per-worker initialization (iterator-UDF prologue).
     from credit_ocr_system_spark.kernel.extract import extract_document
 
-    if guard_off is None:
-        guard_off = _guard_disabled_by_env()
     schema = _arrow_schema(fields)
     for batch in batches:
         urls = batch.column("url").to_pylist()
@@ -237,8 +223,7 @@ def _extract_batches(
                     for i, e in enumerate(res["elements"])
                 ]
             rows.append(row)
-        if (not guard_off and n_errors == len(rows)
-                and n_errors >= _BATCH_GUARD_MIN_ROWS):
+        if n_errors == len(rows) and n_errors >= _BATCH_GUARD_MIN_ROWS:
             raise RuntimeError(
                 f"extraction kernel failed on ALL {n_errors} documents "
                 f"of a batch — systemic regression, failing the task "
@@ -260,13 +245,8 @@ def extract_pages(pages: DataFrame, *, fields: bool = False) -> DataFrame:
     second match pass, and the largest column after the payload text
     stays out of the Arrow batches.
     """
-    # capture the escape hatch on the DRIVER; the bool travels to
-    # executors inside the serialized closure
-    guard_off = _guard_disabled_by_env()
-
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _extract_batches(batches, guard_off=guard_off,
-                                fields=fields)
+        return _extract_batches(batches, fields=fields)
 
     return pages.select("url", "html").mapInArrow(
         run, schema=_spark_schema(fields))

@@ -99,6 +99,11 @@ class SnapshotSink:
       ``read_snapshot`` (≈ ``VERSION AS OF``): earlier snapshots stay
       immutable on disk, a replace only redirects the *current* view.
 
+    A view is read in one parquet scan over its snapshot dirs with
+    schemas merged, so reading it costs the same Spark jobs however
+    many snapshots it spans. Snapshots carry no partition spec: every
+    snapshot dir is flat part files.
+
     On a cluster, swap these for the corresponding Iceberg calls.
     """
 
@@ -162,44 +167,38 @@ class SnapshotSink:
         return [os.path.join(self.root, s["dir"])
                 for s in self._visible(as_of)]
 
+    @staticmethod
+    def _read(spark: SparkSession, paths: list[str]) -> DataFrame:
+        """One parquet scan over snapshot dirs. ``mergeSchema`` unions
+        the file footers' schemas: a column only later snapshots carry
+        reads as null in older rows (Iceberg's add-column rule), and
+        incompatible types raise ``CANNOT_MERGE_SCHEMAS`` — without it
+        Spark would take one footer's schema and drop such a column
+        silently."""
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+
     def read_committed(self, spark: SparkSession,
                        as_of: str | None = None) -> DataFrame | None:
         """Current view, or the view as of snapshot ``as_of``
-        (Iceberg ``VERSION AS OF`` time travel).
-
-        Snapshots are read individually and unioned by name: each may
-        carry a different partition spec (hive-layout partition
-        columns come back in a different column order), and a single
-        multi-path read would trip partition discovery across mixed
-        layouts."""
+        (Iceberg ``VERSION AS OF`` time travel), read in one scan over
+        the visible snapshot dirs with their schemas merged."""
         paths = self.committed_paths(as_of)
         if not paths:
             return None
-        dfs = [spark.read.parquet(p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return self._read(spark, paths)
 
     def read_snapshot(self, spark: SparkSession,
                       run_id: str) -> DataFrame:
         """One snapshot's own rows (not the merged view)."""
         for s in self.committed_snapshots():
             if s["run_id"] == run_id:
-                return spark.read.parquet(
-                    os.path.join(self.root, s["dir"]))
+                return self._read(
+                    spark, [os.path.join(self.root, s["dir"])])
         raise KeyError(f"no committed snapshot for run {run_id}")
 
     def write_snapshot(self, df: DataFrame, run_id: str,
                        meta: dict | None = None,
-                       op: str = "append",
-                       partition_by: list[str] | None = None) -> str:
-        """``partition_by`` is this snapshot's partition spec —
-        recorded in the manifest per snapshot, so the spec can evolve
-        across commits (Iceberg partition-spec evolution): each
-        snapshot dir is self-contained and reads merge old- and
-        new-spec snapshots transparently (partition columns come back
-        as data columns either way)."""
+                       op: str = "append") -> str:
         # A run_id names an immutable snapshot; reusing one would
         # rewrite snap-<run_id> while a lazy plan (e.g. merge_upsert's
         # survivors) may still be reading it, and the duplicate
@@ -209,13 +208,10 @@ class SnapshotSink:
                 f"run_id {run_id!r} already has a committed snapshot; "
                 "snapshots are immutable — use a fresh run_id")
         snap_dir = f"snap-{run_id}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.root, snap_dir))
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.root, snap_dir))
         os.makedirs(self.root, exist_ok=True)
         entry = {"dir": snap_dir, "run_id": run_id, "op": op,
-                 "partition_spec": list(partition_by or []),
                  "committed_at": time.time(), **(meta or {})}
         # The append+flush of one manifest line is the atomic commit.
         self._end_torn_tail()
@@ -263,7 +259,6 @@ class SnapshotSink:
 
     def compact(self, spark: SparkSession, run_id: str,
                 target_bytes: int = 128 << 20,
-                partition_by: list[str] | None = None,
                 meta: dict | None = None) -> dict:
         """Small-files maintenance — Iceberg's ``rewrite_data_files``
         (binpack) as a replace snapshot.
@@ -295,7 +290,7 @@ class SnapshotSink:
         self.write_snapshot(
             current.repartition(n_target), run_id,
             {"compacted_files": len(before), **(meta or {})},
-            op="replace", partition_by=partition_by)
+            op="replace")
         return {"run_id": run_id, "files_before": len(before),
                 "files_after": len(self.data_files()),
                 "bytes_before": n_bytes}
@@ -448,8 +443,7 @@ class IcebergSink:
 
     def write_snapshot(self, df: DataFrame, run_id: str,
                        meta: dict | None = None,
-                       op: str = "append",
-                       partition_by: list[str] | None = None) -> str:
+                       op: str = "append") -> str:
         if any(s["run_id"] == run_id for s in self.committed_snapshots()):
             raise ValueError(
                 f"run_id {run_id!r} already has a committed snapshot; "
@@ -460,8 +454,6 @@ class IcebergSink:
         for k, v in (meta or {}).items():
             writer = writer.option(f"snapshot-property.{k}", str(v))
         if not self._table_exists():
-            if partition_by:
-                writer = writer.partitionedBy(*map(F.col, partition_by))
             writer.create()
         else:
             writer.append()
@@ -719,7 +711,6 @@ def run_extraction_job(
     salt: int = SALT_DEFAULT,
     wet_dir: str | None = None,
     wat_dir: str | None = None,
-    detect_hot: bool = True,
 ) -> dict:
     """One resumable extraction run; returns commit stats.
 
@@ -746,7 +737,7 @@ def run_extraction_job(
     try:
         stats = _extraction_run(spark, pages, output_root, run_id,
                                 num_partitions, salt, wet_dir, wat_dir,
-                                detect_hot, actions)
+                                actions)
     finally:
         sc.removeJobTag(tag)
     stats["action_s"] = actions
@@ -766,7 +757,7 @@ def _tagged_job_count(spark: SparkSession, tag: str) -> int:
 
 
 def _extraction_run(spark, pages, output_root, run_id, num_partitions,
-                    salt, wet_dir, wat_dir, detect_hot,
+                    salt, wet_dir, wat_dir,
                     actions: dict[str, float]) -> dict:
     """The body of :func:`run_extraction_job`; records the wall
     seconds of each Spark action in ``actions``."""
@@ -808,21 +799,18 @@ def _extraction_run(spark, pages, output_root, run_id, num_partitions,
             fields, run_id, {"n_rows": n_fields}))
         timed("write.lineage", lambda: sink_lineage.write_snapshot(
             lineage, run_id))
-        n_hot = None
-        if detect_hot:
-            # Skew-guard sidecar: detected hot domains for THIS run's
-            # batch (empty snapshot = clean batch, still recorded so
-            # the absence of skew is auditable, not assumed). The
-            # cached output holds exactly the batch's urls, so the
-            # guard reads no input a second time.
-            seen = Observation()
-            hot_rows = (detect_hot_domains(extracted)
-                        .filter(F.col("is_hot"))
-                        .withColumn("run_id", F.lit(run_id))
-                        .observe(seen, F.count(F.lit(1)).alias("n")))
-            timed("write.hot_keys", lambda: sink_hotkeys.write_snapshot(
-                hot_rows, run_id))
-            n_hot = seen.get["n"]
+        # Skew-guard sidecar: detected hot domains for THIS run's
+        # batch (empty snapshot = clean batch, still recorded so the
+        # absence of skew is auditable, not assumed). The cached
+        # output holds exactly the batch's urls, so the guard reads
+        # no input a second time.
+        seen = Observation()
+        hot_rows = (detect_hot_domains(extracted)
+                    .filter(F.col("is_hot"))
+                    .withColumn("run_id", F.lit(run_id))
+                    .observe(seen, F.count(F.lit(1)).alias("n")))
+        timed("write.hot_keys", lambda: sink_hotkeys.write_snapshot(
+            hot_rows, run_id))
         # doc_status is keyed state, not an event log: a re-extracted
         # url must UPDATE its row (reference MERGE semantics,
         # src/dms/adapters.py:130-167), so the status sink upserts.
@@ -840,9 +828,8 @@ def _extraction_run(spark, pages, output_root, run_id, num_partitions,
         timed("merge.doc_status", lambda: sink_status.merge_upsert(
             spark, status, run_id, keys=["url"]))
         stats = {"run_id": run_id, "n_docs": n_docs,
-                 "n_fields": n_fields, "skipped": False}
-        if n_hot is not None:
-            stats["n_hot_domains"] = n_hot
+                 "n_fields": n_fields, "n_hot_domains": seen.get["n"],
+                 "skipped": False}
         if wet_dir is not None:
             from ..sources.warc import write_wet
 

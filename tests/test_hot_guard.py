@@ -13,8 +13,7 @@ Covers:
   BENCH/SKEW.md shape) trips the detector — the seeded domain lands
   in the sidecar flagged hot;
 * the sidecar snapshot is written for every run (clean batch =>
-  empty snapshot, auditable absence of skew);
-* ``detect_hot=False`` opts out (no sidecar snapshot).
+  empty snapshot, auditable absence of skew).
 """
 
 import os
@@ -79,16 +78,6 @@ def test_sidecar_written_even_without_hot_rows(spark, tmp_path):
     df = committed.toPandas()
     assert stats["n_hot_domains"] == 0
     assert len(df) == 0
-
-
-def test_detect_hot_false_skips_sidecar(spark, tmp_path):
-    out = str(tmp_path / "job")
-    pages = pages_df(spark, 60, partitions=2)
-    stats = run_extraction_job(spark, pages, out, num_partitions=2,
-                               detect_hot=False)
-    assert "n_hot_domains" not in stats
-    side = SnapshotSink(os.path.join(out, "hot_keys"))
-    assert side.read_committed(spark) is None
 
 
 def test_detect_hot_domains_standalone(spark):

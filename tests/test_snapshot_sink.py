@@ -85,30 +85,42 @@ def test_pipeline_status_sink_upserts(spark, tmp_path):
     assert df.select("url").distinct().count() == 12
 
 
-def test_partition_spec_evolution(spark, tmp_path):
-    """The partition spec can change between snapshots (Iceberg
-    partition-spec evolution): reads merge old- and new-spec
-    snapshots, and the manifest records the spec per snapshot."""
-    sink = SnapshotSink(str(tmp_path / "evo"))
-    df1 = spark.createDataFrame(
-        [("u1", "html", "done"), ("u2", "pdf", "done")],
-        "url string, doc_kind string, status string")
-    df2 = spark.createDataFrame(
-        [("u3", "html", "failed")],
-        "url string, doc_kind string, status string")
-    sink.write_snapshot(df1, "r1", partition_by=["doc_kind"])
-    sink.write_snapshot(df2, "r2", partition_by=["status"])
+def test_view_is_one_scan_with_merged_schemas(spark, tmp_path):
+    """A view reads in one schema-merging scan: a column added by a
+    later snapshot is null in older rows (Iceberg's add-column rule),
+    an incompatible column type raises, and reading a 5-snapshot view
+    launches one Spark job, not one per snapshot."""
+    import pytest
 
-    got = {(r.url, r.doc_kind, r.status)
+    from credit_ocr_system_spark.plans.pipeline import _tagged_job_count
+
+    sink = SnapshotSink(str(tmp_path / "evo"))
+    sink.write_snapshot(_status_df(spark, [("u1", "a")]), "r1")
+    sink.write_snapshot(spark.createDataFrame(
+        [("u2", "b", 7)], "url string, status string, n long"), "r2")
+    got = {(r.url, r.status, r.n)
            for r in sink.read_committed(spark).collect()}
-    assert got == {("u1", "html", "done"), ("u2", "pdf", "done"),
-                   ("u3", "html", "failed")}
-    specs = {s["run_id"]: s["partition_spec"]
-             for s in sink.committed_snapshots()}
-    assert specs == {"r1": ["doc_kind"], "r2": ["status"]}
-    # hive layout actually materialized on disk
-    assert os.path.isdir(
-        os.path.join(sink.root, "snap-r1", "doc_kind=pdf"))
+    assert got == {("u1", "a", None), ("u2", "b", 7)}
+
+    bad = SnapshotSink(str(tmp_path / "bad"))
+    bad.write_snapshot(_status_df(spark, [("u1", "a")]), "r1")
+    bad.write_snapshot(spark.createDataFrame(
+        [("u2", 3)], "url string, status int"), "r2")
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        bad.read_committed(spark).collect()
+
+    five = SnapshotSink(str(tmp_path / "five"))
+    for i in range(5):
+        five.write_snapshot(_status_df(spark, [(f"u{i}", "a")]), f"r{i}")
+    sc = spark.sparkContext
+    tag = "read-committed-five"
+    sc.addJobTag(tag)
+    try:
+        view = five.read_committed(spark)
+    finally:
+        sc.removeJobTag(tag)
+    assert _tagged_job_count(spark, tag) == 1
+    assert view.count() == 5
 
 
 def test_merge_upsert_rejects_duplicate_source_keys(spark, tmp_path):

@@ -286,3 +286,24 @@ def test_job_records_its_actions_without_taking_the_job_group(
     assert all(s > 0 for s in stats["action_s"].values())
     # every job of the call ran under the caller's group as well
     assert 0 < stats["spark_jobs"] <= len(caller_jobs)
+
+
+def test_delta_run_jobs_do_not_grow_with_committed_history(
+        spark, tmp_path):
+    """The same 10-doc delta over the same 30 committed docs launches
+    the same Spark jobs whether the 30 were committed in 1 slice or in
+    5: reading the committed view is one scan, not one per snapshot."""
+    def delta_jobs(out, slices):
+        size = 30 // slices
+        for i in range(slices):
+            run_extraction_job(
+                spark, pages_df(spark, size, partitions=2, start=i * size),
+                out, num_partitions=2)
+        stats = run_extraction_job(spark, pages_df(spark, 40, partitions=2),
+                                   out, num_partitions=2)
+        assert stats["n_docs"] == 10
+        return stats["spark_jobs"]
+
+    one = delta_jobs(str(tmp_path / "one"), 1)
+    five = delta_jobs(str(tmp_path / "five"), 5)
+    assert five == one
