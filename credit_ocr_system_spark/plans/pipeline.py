@@ -5,9 +5,10 @@ The full plan (SURVEY.md §3.2) is a single Catalyst plan per run::
     pages ──repartition(salted url hash)──► mapInArrow(kernel)
           ──► cache (text, pairs, the kernel's matched + validated
               fields; no per-line elements)
-          ──► extracted | fields (explode) | lineage | hot_keys
-              (CMS guard over the cached urls) | doc_status (MERGE)
-          ──► snapshot-atomic writes
+          ──► extracted (url-sorted) | fields (explode) | lineage
+              | hot_keys (exact host counts over the cached urls)
+              | doc_status (copy-on-write MERGE)
+          ──► snapshot-atomic zstd parquet writes
 
 Scale mechanics (north_rule):
 
@@ -26,6 +27,10 @@ Scale mechanics (north_rule):
 * **One kernel pass, one count.** Every sink reads the cached kernel
   output; the doc and field counts come from one aggregate, the
   hot-domain count from an ``Observation`` on its write.
+* **Commit only the delta.** Every sink appends the run's own rows:
+  ``doc_status`` is a copy-on-write MERGE that appends when no
+  committed url matches (the resume anti-join guarantees that for a
+  delta), so no run rewrites history.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ import uuid
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..operators.extraction import extract_pages
 from ..operators.metrics import partition_lineage
@@ -92,9 +98,10 @@ class SnapshotSink:
     * **merge/upsert** — ``merge_upsert`` (≈ ``MERGE INTO t USING s ON
       keys WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT``,
       the reference's Postgres upsert in
-      ``src/dms/adapters.py:130-167``): written as a ``replace``
-      snapshot that carries survivors + new rows, so reads never need
-      merge logic;
+      ``src/dms/adapters.py:130-167``), copy-on-write: when no source
+      key matches a committed one it is an ``append`` of the source
+      rows; otherwise a ``replace`` snapshot that carries survivors +
+      new rows, so reads never need merge logic;
     * **time travel** — ``read_committed(as_of=run_id)`` /
       ``read_snapshot`` (≈ ``VERSION AS OF``): earlier snapshots stay
       immutable on disk, a replace only redirects the *current* view.
@@ -102,7 +109,8 @@ class SnapshotSink:
     A view is read in one parquet scan over its snapshot dirs with
     schemas merged, so reading it costs the same Spark jobs however
     many snapshots it spans. Snapshots carry no partition spec: every
-    snapshot dir is flat part files.
+    snapshot dir is flat zstd-compressed part files (Iceberg's default
+    Parquet codec since 1.4).
 
     On a cluster, swap these for the corresponding Iceberg calls.
     """
@@ -208,7 +216,7 @@ class SnapshotSink:
                 f"run_id {run_id!r} already has a committed snapshot; "
                 "snapshots are immutable — use a fresh run_id")
         snap_dir = f"snap-{run_id}"
-        df.write.mode("overwrite").parquet(
+        df.write.mode("overwrite").option("compression", "zstd").parquet(
             os.path.join(self.root, snap_dir))
         os.makedirs(self.root, exist_ok=True)
         entry = {"dir": snap_dir, "run_id": run_id, "op": op,
@@ -223,28 +231,43 @@ class SnapshotSink:
                      run_id: str, keys: list[str],
                      meta: dict | None = None) -> str:
         """MERGE-equivalent: new rows win on ``keys``, unmatched old
-        rows survive. One replace snapshot; prior snapshots remain
-        readable via time travel.
+        rows survive; prior snapshots remain readable via time travel.
+
+        Copy-on-write, as Iceberg rewrites only the files that hold a
+        matched row: when no source key matches a committed key, the
+        source rows are committed as an ``append`` snapshot and no
+        committed row is rewritten; otherwise one ``replace`` snapshot
+        carries the survivors + the source rows.
 
         Like ``MERGE INTO``, a source batch with duplicate keys is an
         error (silently unioning it would leave the keyed table with
-        several rows per key forever) — dedupe upstream first. The
-        check is one extra action over the keys projection, cheap
-        relative to the snapshot write.
+        several rows per key forever) — dedupe upstream first. One
+        probe action decides both: the source keys grouped with their
+        counts, left-joined to the committed keys, top row by count.
         """
-        dup = (df.groupBy(*keys).count()
-               .where(F.col("count") > 1).limit(1).collect())
-        if dup:
+        current = self.read_committed(spark)
+        probe = df.groupBy(*keys).count()
+        if current is None:
+            hit = F.lit(False)
+        else:
+            probe = probe.join(
+                current.select(*keys).withColumn("_hit", F.lit(True)),
+                keys, "left")
+            hit = F.col("_hit").isNotNull()
+        top = (probe.where((F.col("count") > 1) | hit)
+               .select(*keys, "count")
+               .orderBy(F.col("count").desc()).limit(1).collect())
+        if top and top[0]["count"] > 1:
             raise ValueError(
                 f"merge_upsert source has duplicate keys "
-                f"(e.g. {dict(zip(keys, dup[0][:-1]))}); a MERGE "
+                f"(e.g. {dict(zip(keys, top[0][:-1]))}); a MERGE "
                 f"source must be unique on {keys}")
-        current = self.read_committed(spark)
-        if current is not None:
-            survivors = current.join(df.select(*keys).distinct(),
-                                     keys, "left_anti")
-            df = survivors.unionByName(df)
-        return self.write_snapshot(df, run_id, meta, op="replace")
+        if not top:
+            return self.write_snapshot(df, run_id, meta)
+        survivors = current.join(df.select(*keys).distinct(),
+                                 keys, "left_anti")
+        return self.write_snapshot(survivors.unionByName(df), run_id,
+                                   meta, op="replace")
 
     def data_files(self, as_of: str | None = None) -> list[str]:
         """Parquet part files backing the visible view — the metadata
@@ -575,8 +598,9 @@ def run_crawl_collapse_job(
     high-water mark — a rerun over the same log folds only rows
     fetched after it, and an unchanged log is a no-op (idempotent).
     Only keys TOUCHED by the delta are rewritten (``merge_upsert``:
-    untouched committed rows survive as-is), so the write also scales
-    with the delta, not the corpus. Batch equality (merged state ≡
+    untouched committed rows survive as-is, and a delta of only new
+    keys is an append), so the write also scales with the delta, not
+    the corpus. Batch equality (merged state ≡
     full recompute) is the oracle-checked contract of the underlying
     merge operator.
 
@@ -679,28 +703,37 @@ def kernel_fields(extracted: DataFrame) -> DataFrame:
 
 
 def detect_hot_domains(pages: DataFrame) -> DataFrame:
-    """CMS heavy-hitter detection over the batch's url hosts — the
-    skew guard in front of the extraction job (VERDICT r4 item #7).
+    """Exact per-host counts over the batch's urls — the skew guard in
+    front of the extraction job (VERDICT r4 item #7).
 
     The extraction path itself is hot-key-immune by construction
     (``repartition_salted`` hashes ``xxhash64(url, salt)``, never a
     domain-derived key — see BENCH/SKEW.md for the measured 32.06 →
     1.11 balance evidence), so this is an *observability* guard: any
-    host exceeding ~1/160 of the batch is recorded in the run's
+    host at or above 1/160 of the batch is recorded in the run's
     ``hot_keys`` sidecar, the signal that a domain-keyed DOWNSTREAM
     consumer (host-graph aggregation, per-domain stats, crawl
     politeness buckets) needs its own salting or AQE skew handling.
 
-    Deployment shape (``relational.detect_hot_keys``): the only
-    corpus-sized exchanges are bounded by the CMS slot space and the
-    sampled-candidate distinct — nothing driver-side grows with the
-    corpus, and the input scan is column-pruned to ``url``."""
-    from ..operators.relational import detect_hot_keys
+    Returns ``(key, est_count, n_total, is_hot)``, one row per host:
+    ``est_count`` is the host's exact count, from one group-by with
+    map-side partial aggregation over the column-pruned ``url``, and
+    ``n_total`` the sum of those counts. A batch's distinct hosts are
+    few next to its documents, so the exact count is cheaper than a
+    sketch plus a sampled-candidate probe, and it misses no hot host.
+    The count-min sketch (``relational.detect_hot_keys``) stays as the
+    driver queries' operator."""
+    from ..operators.relational import HOT_ONE_IN
 
     host = F.lower(F.substring_index(
         F.regexp_replace(F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://",
                          ""), "/", 1))
-    return detect_hot_keys(pages.select("url"), host, F.col("url"))
+    n_total = F.sum("est_count").over(Window.partitionBy())
+    return (pages.groupBy(host.alias("key"))
+            .agg(F.count(F.lit(1)).alias("est_count"))
+            .select("key", "est_count", n_total.alias("n_total"),
+                    (F.col("est_count") * HOT_ONE_IN >= n_total)
+                    .alias("is_hot")))
 
 
 def run_extraction_job(
@@ -793,8 +826,11 @@ def _extraction_run(spark, pages, output_root, run_id, num_partitions,
         fields = kernel_fields(extracted)
         lineage = partition_lineage(extracted, run_id)
 
+        # url-sorted like ``fields``: the rebalance lets AQE coalesce a
+        # small delta into one file instead of one per salted partition
         timed("write.extracted", lambda: sink_extracted.write_snapshot(
-            extracted.drop("fields"), run_id, {"n_docs": n_docs}))
+            extracted.drop("fields").hint("rebalance")
+            .sortWithinPartitions("url"), run_id, {"n_docs": n_docs}))
         timed("write.fields", lambda: sink_fields.write_snapshot(
             fields, run_id, {"n_rows": n_fields}))
         timed("write.lineage", lambda: sink_lineage.write_snapshot(

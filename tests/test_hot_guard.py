@@ -1,10 +1,10 @@
 """Hot-domain skew guard wired into the extraction job.
 
-VERDICT r4 item #7: the CMS heavy-hitter detector
-(``relational.detect_hot_keys``) now runs in front of every
-``run_extraction_job`` batch and records detected hot domains in a
-``hot_keys`` sidecar per run. The extraction path itself is
-hot-key-immune (salted url-hash repartition — BENCH/SKEW.md), so the
+VERDICT r4 item #7: the hot-domain guard (``detect_hot_domains``,
+exact per-host counts) runs in every ``run_extraction_job`` batch and
+records the hot domains in a ``hot_keys`` sidecar per run. The
+extraction path itself is hot-key-immune (salted url-hash
+repartition — BENCH/SKEW.md), so the
 sidecar is the observability record a domain-keyed downstream
 consumer checks before choosing its own partitioning.
 
@@ -13,10 +13,13 @@ Covers:
   BENCH/SKEW.md shape) trips the detector — the seeded domain lands
   in the sidecar flagged hot;
 * the sidecar snapshot is written for every run (clean batch =>
-  empty snapshot, auditable absence of skew).
+  empty snapshot, auditable absence of skew);
+* the sidecar lists every host at or above 1/160 of the batch with
+  its exact count — no hot host is missed.
 """
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -90,3 +93,22 @@ def test_detect_hot_domains_standalone(spark):
     top = int(flagged.loc[HOT_DOMAIN, "est_count"])
     assert top >= 80
     assert top == int(flagged["est_count"].max())
+
+
+def test_sidecar_holds_exact_counts_of_every_hot_host(spark, tmp_path):
+    out = str(tmp_path / "job")
+    pages = pages_df(spark, 100, partitions=4)
+    stats = run_extraction_job(spark, pages, out, num_partitions=4)
+
+    urls = pages.select("url").toPandas()["url"]
+    n = len(urls)
+    hosts = urls.map(lambda u: re.sub(r"^[A-Za-z][A-Za-z0-9+.-]*://", "",
+                                      u).split("/", 1)[0].lower())
+    counts = hosts.value_counts()
+    want = {(h, int(c), n) for h, c in counts.items() if c * 160 >= n}
+
+    side = SnapshotSink(os.path.join(out, "hot_keys"))
+    got = {(r.key, r.est_count, r.n_total)
+           for r in side.read_committed(spark).collect()}
+    assert got == want
+    assert stats["n_hot_domains"] == len(want)

@@ -66,6 +66,22 @@ def test_append_after_replace_stays_visible(spark, tmp_path):
     assert os.path.isdir(os.path.join(sink.root, "snap-r1"))
 
 
+def test_merge_upsert_without_a_match_appends_the_source(spark, tmp_path):
+    """Copy-on-write: a MERGE whose keys match no committed row commits
+    the source rows alone as an append, rewriting nothing."""
+    sink = SnapshotSink(str(tmp_path / "cow"))
+    sink.merge_upsert(spark, _status_df(
+        spark, [("u1", "failed"), ("u2", "done")]), "r1", keys=["url"])
+    sink.merge_upsert(spark, _status_df(
+        spark, [("u3", "done")]), "r2", keys=["url"])
+
+    assert sink.committed_snapshots()[-1]["op"] == "append"
+    assert _by_url(sink.read_snapshot(spark, "r2")) == {"u3": "done"}
+    assert _by_url(sink.read_committed(spark)) == {
+        "u1": "failed", "u2": "done", "u3": "done"}
+    assert sink.read_committed(spark).count() == 3
+
+
 def test_pipeline_status_sink_upserts(spark, tmp_path):
     """Re-running extraction over a url (after its committed snapshot
     is removed) must UPDATE the doc_status row, not duplicate it."""

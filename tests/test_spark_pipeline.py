@@ -307,3 +307,24 @@ def test_delta_run_jobs_do_not_grow_with_committed_history(
     one = delta_jobs(str(tmp_path / "one"), 1)
     five = delta_jobs(str(tmp_path / "five"), 5)
     assert five == one
+
+
+def test_delta_snapshot_is_one_url_sorted_zstd_file(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, pages_df(spark, 30, partitions=2), out,
+                       num_partitions=2)
+    stats = run_extraction_job(spark, pages_df(spark, 40, partitions=2),
+                               out, num_partitions=2)
+    assert stats["n_docs"] == 10
+
+    snap = SnapshotSink(os.path.join(out, "extracted")).committed_paths()[-1]
+    files = glob.glob(os.path.join(snap, "*.parquet"))
+    assert len(files) == 1
+    urls = pq.read_table(files[0], columns=["url"]).column("url").to_pylist()
+    assert len(urls) == 10 and urls == sorted(urls)
+    meta = pq.ParquetFile(files[0]).metadata
+    assert {meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)} == {"ZSTD"}
